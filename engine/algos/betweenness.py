@@ -32,7 +32,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf
+from engine.algos.loopstate import iterative_conf
 
 
 @dataclass
@@ -51,7 +51,7 @@ def betweenness(
     """Accumulated Brandes dependency over the pivot set (every vertex if
     ``pivots`` is None — exact betweenness, affordable only on small
     graphs; pass a sampled (vid) DataFrame at scale)."""
-    # Scale-adaptive loop partitioning (see pagerank.loop_shuffle_partitions).
+    # Scale-adaptive loop partitioning (see loopstate.loop_shuffle_partitions).
     with iterative_conf(spark, loop_rows=edges.count(), row_bytes=32):
         return _brandes(spark, edges, pivots, max_iter)
 

@@ -20,10 +20,14 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf, set_loop_partitions
+from engine.algos.loopstate import (
+    iterative_conf,
+    observed_checkpoint,
+    set_loop_partitions,
+)
 
 
 @dataclass
@@ -82,24 +86,6 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def _observed_ckpt(e: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
-    """localCheckpoint(eager) with the order-insensitive edge-set
-    fingerprint (count, xor of pair hashes) OBSERVED on the same job —
-    xor is overflow-free under ANSI mode and order/partitioning-
-    insensitive, and rows are distinct by construction so
-    xor-cancellation needs a genuine 64-bit collision. Riding the
-    materialization replaces the r5 shape's dedicated checksum scan per
-    round; the two scalars remain the only per-round driver traffic."""
-    obs = Observation()
-    out = e.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-    ).localCheckpoint(eager=True)
-    vals = obs.get
-    return out, (int(vals["n"]), int(vals["h"]))
-
-
 def connected_components(
     spark: SparkSession,
     edges: DataFrame,
@@ -121,18 +107,23 @@ def _cc_loop(spark, edges, vertices, max_rounds):
         )
     vids = vertices.select("vid")
 
-    e, prev = _observed_ckpt(  # lineage cut per round, in-memory
+    # Lineage cut per round, in-memory, with the edge-set fingerprint
+    # (count, xor of pair hashes) observed on the same job; rows are
+    # distinct by construction.
+    e, prev = observed_checkpoint(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
+        .distinct(),
+        "u", "v",
     )
     # Scale-adaptive loop partitioning from the edge count the setup
     # materialization just observed (no extra job); the star-step rounds
-    # build fresh plans, so no layout contract spans the conf change.
-    set_loop_partitions(spark, prev[0])
+    # build fresh plans, so no layout contract spans the conf change. The
+    # rounds run over the doubled symmetric view (row_bytes=32).
+    set_loop_partitions(spark, prev[0], row_bytes=32)
     rounds = 0
     for rounds in range(1, max_rounds + 1):
-        nxt, cur = _observed_ckpt(_small_star(_large_star(e)))
+        nxt, cur = observed_checkpoint(_small_star(_large_star(e)), "u", "v")
         e.unpersist()  # previous round's edge set is never read again
         e = nxt
         if cur == prev:

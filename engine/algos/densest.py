@@ -48,7 +48,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf
+from engine.algos.loopstate import iterative_conf
 
 
 @dataclass

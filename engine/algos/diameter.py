@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.algos.landmarks import _multi_sssp
-from engine.algos.pagerank import iterative_conf
+from engine.algos.loopstate import iterative_conf
 
 
 @dataclass(frozen=True)

@@ -36,8 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.loopstate import fresh_checkpoint
-from engine.algos.pagerank import iterative_conf
+from engine.algos.loopstate import fresh_checkpoint, iterative_conf
 
 
 def smooth_features(

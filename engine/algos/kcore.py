@@ -44,10 +44,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf
+from engine.algos.loopstate import iterative_conf, observed_checkpoint
 
 
 @dataclass
@@ -55,19 +55,6 @@ class KCoreResult:
     cores: DataFrame  # (vid, core)
     iterations: int
     converged: bool
-
-
-def _observed_ckpt(est: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
-    """localCheckpoint(eager) with the state checksum observed on the
-    same job (replaces the r5 shape's dedicated checksum scan/round)."""
-    obs = Observation()
-    out = est.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("vid", "est")), F.lit(0)).alias("h"),
-    ).localCheckpoint(eager=True)
-    vals = obs.get
-    return out, (int(vals["n"]), int(vals["h"]))
 
 
 def core_numbers(
@@ -80,7 +67,7 @@ def core_numbers(
 
     ``vertices``: optional (vid, ...) to include edge-less vertices, same
     contract as the other algorithms."""
-    # Scale-adaptive loop partitioning (pagerank.loop_shuffle_partitions)
+    # Scale-adaptive loop partitioning (loopstate.loop_shuffle_partitions)
     # needs the size before the nbrs layout commits a partition count; the
     # symmetric view doubles the rows (row_bytes=32 ~ 2 x 16B edge rows).
     with iterative_conf(spark, loop_rows=edges.count(), row_bytes=32):
@@ -99,9 +86,10 @@ def _kcore_loop(spark, edges, vertices, max_iter):
     )
     # est0 = degree; the h-operator only ever lowers it (guarded by least()
     # below), so the loop is a monotone descent onto the coreness fixpoint.
-    est, prev_cs = _observed_ckpt(
+    est, prev_cs = observed_checkpoint(
         nbrs.groupBy(F.col("v").alias("vid"))
-        .agg(F.count(F.lit(1)).cast("int").alias("est"))
+        .agg(F.count(F.lit(1)).cast("int").alias("est")),
+        "vid", "est",
     )
 
     w = Window.partitionBy("u").orderBy(F.desc("est"), "v")
@@ -118,9 +106,10 @@ def _kcore_loop(spark, edges, vertices, max_iter):
         hidx = ranked.groupBy(F.col("u").alias("vid")).agg(
             F.max(F.least("est", "rn")).cast("int").alias("h")
         )
-        new_est, cs = _observed_ckpt(
+        new_est, cs = observed_checkpoint(
             est.join(hidx, "vid", "left")
-            .select("vid", F.least("est", F.coalesce("h", F.lit(0))).alias("est"))
+            .select("vid", F.least("est", F.coalesce("h", F.lit(0))).alias("est")),
+            "vid", "est",
         )
         old, est = est, new_est
         old.unpersist()

@@ -39,7 +39,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf
+from engine.algos.loopstate import iterative_conf
 
 
 @dataclass(frozen=True)
@@ -85,7 +85,7 @@ def _multi_sssp(spark, e, seeds, max_iter):
     convergence job per round)."""
     from pyspark.sql import Observation
 
-    from engine.algos.pagerank import set_loop_partitions
+    from engine.algos.loopstate import set_loop_partitions
 
     # Scale-adaptive loop partitioning; both callers pass a materialized
     # checkpoint, so the count is a cached scan, and both call from inside

@@ -26,10 +26,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf
+from engine.algos.loopstate import iterative_conf, observed_checkpoint
 
 
 @dataclass
@@ -39,25 +39,16 @@ class LPAResult:
     converged: bool
 
 
-def _observed_ckpt(labels: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
-    """localCheckpoint(eager) with the state checksum observed on the
-    same job (replaces the r5 shape's dedicated checksum scan/round)."""
-    obs = Observation()
-    out = labels.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("vid", "label")), F.lit(0)).alias("h"),
-    ).localCheckpoint(eager=True)
-    vals = obs.get
-    return out, (int(vals["n"]), int(vals["h"]))
-
-
 def label_propagation(
     spark: SparkSession,
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 50,
 ) -> LPAResult:
+    """Label every vertex by the module's deterministic LPA spec (a)-(e).
+
+    ``edges``: pass a materialized (cached or checkpointed) table — the
+    loop sizing counts it once before the loop."""
     # Scale-adaptive loop partitioning; size known before the nbrs/vids
     # layouts commit a partition count (symmetric view: row_bytes=32).
     with iterative_conf(spark, loop_rows=edges.count(), row_bytes=32):
@@ -89,7 +80,9 @@ def _lpa_loop(spark, edges, vertices, max_iter):
         .localCheckpoint(eager=True)
     )
 
-    labels, cs0 = _observed_ckpt(vids.select("vid", F.col("vid").alias("label")))
+    labels, cs0 = observed_checkpoint(
+        vids.select("vid", F.col("vid").alias("label")), "vid", "label"
+    )
     history: list[tuple[tuple[int, int], DataFrame]] = [(cs0, labels)]
 
     converged = False
@@ -105,10 +98,11 @@ def _lpa_loop(spark, edges, vertices, max_iter):
             F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))).alias("b")
         ).select("vid", (-F.col("b.nl")).alias("label"))
         # (d): vertices with no neighbors keep their current label.
-        new_labels, cs = _observed_ckpt(
+        new_labels, cs = observed_checkpoint(
             vids.join(best, "vid", "left")
             .join(labels.withColumnRenamed("label", "old"), "vid", "left")
-            .select("vid", F.coalesce("label", "old").alias("label"))
+            .select("vid", F.coalesce("label", "old").alias("label")),
+            "vid", "label",
         )
         if cs == history[-1][0]:
             labels = new_labels

@@ -36,8 +36,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf
-from engine.algos.loopstate import fresh_checkpoint
+from engine.algos.loopstate import fresh_checkpoint, iterative_conf
 
 
 @dataclass
@@ -100,7 +99,7 @@ def minimum_spanning_forest(
     parallel edges collapse to their cheapest. Ties are broken by the
     total order (weight, min vid, max vid), which fixes a unique forest.
     """
-    # Scale-adaptive loop partitioning (see pagerank.loop_shuffle_partitions).
+    # Scale-adaptive loop partitioning (see loopstate.loop_shuffle_partitions).
     with iterative_conf(spark, loop_rows=edges.count(), row_bytes=32):
         return _boruvka(spark, edges, vertices, weight_col, max_rounds)
 

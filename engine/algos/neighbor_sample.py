@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf
+from engine.algos.loopstate import iterative_conf
 from engine.dedup import _h64
 
 

@@ -43,7 +43,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf
+from engine.algos.loopstate import iterative_conf
 
 _INFER_FILTERS_RULE = (
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromConstraints"
@@ -147,7 +147,7 @@ def neighborhood_function(
     so HLL jitter never contributes negative mass)."""
     if not 4 <= p <= 12:
         raise ValueError(f"p must be in [4, 12], got {p}")
-    # NOT scale-adapted (pagerank.loop_shuffle_partitions): the register
+    # NOT scale-adapted (loopstate.loop_shuffle_partitions): the register
     # merge is the rare loop whose per-task state is wide (m-byte arrays
     # per key) — halving the partition count doubles the per-task hash-agg
     # footprint, and the A/B at bench scale measured the adapted loop

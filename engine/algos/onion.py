@@ -60,8 +60,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.loopstate import fresh_checkpoint
-from engine.algos.pagerank import iterative_conf
+from engine.algos.loopstate import fresh_checkpoint, iterative_conf
 
 FOLD_EVERY = 16  # rounds between result folds (bounds live checkpoints)
 

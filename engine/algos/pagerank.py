@@ -14,8 +14,8 @@ Scale design (the parts that must survive 10^12 edges):
   normalized (weight / out-weight), pre-partitioned on ``src`` and persisted
   before the loop. Each iteration then moves only the O(V) rank state: as a
   broadcast (small V — the gather is then map-side against the partitioned
-  edge cache, zero edge movement) or as a hash shuffle (large V).
-  ``broadcast_state`` picks automatically by V.
+  edge cache, zero edge movement) or as a hash shuffle (large V),
+  picked automatically by V (``BROADCAST_STATE_MAX_V``).
 - **ONE action per iteration.** The whole iteration — gather join, salted
   aggregation, update join, new-state materialization — is a single Spark
   job; the convergence L1 delta and the *next* iteration's dangling mass
@@ -36,21 +36,18 @@ Scale design (the parts that must survive 10^12 edges):
   ``salt_hub_threshold`` for non-algebraic gathers, but measured OFF as the
   default: at 10.3M edges it costs a full extra exchange per iteration
   (2.06 s/iter -> 1.26 s/iter at local[32] when removed, r2 probes).
-- **Pinned planner conf for the loop** (``iterative_conf``): AQE off (it
-  re-plans every one of the O(iterations) materializations — measured ~5x
-  per-iteration overhead at small scale, no benefit for these static
-  shapes) and shuffled-hash over sort-merge (SMJ would re-sort the edge
-  cache every iteration).
-- **Constant-depth plans + resumability**: each iteration's state is a
-  Parquet checkpoint, re-read as the next iteration's input (lineage cut);
-  resume picks up from the last committed manifest (io.RunCheckpoint).
+- **Pinned planner conf for the loop** (``loopstate.iterative_conf``): AQE
+  off and shuffled-hash over sort-merge, with a scale-adaptive loop
+  partition count.
+- **Constant-depth plans + resumability**: with a ``RunCheckpoint``, every
+  iteration's state is a Parquet checkpoint, re-read as the next
+  iteration's input (lineage cut); resume picks up from the last
+  committed manifest (io.RunCheckpoint).
 """
 
 from __future__ import annotations
 
-import os
 import time
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -58,107 +55,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from engine.algos.loopstate import iterative_conf
 from engine.graph import hub_vertices
 from engine.io import RunCheckpoint
-
-
-# Target bytes per loop shuffle partition (guide §2.2: 100 MB - 1 GB per
-# reduce partition). Overridable per deployment via the conf key below.
-LOOP_TARGET_PARTITION_BYTES = 128 << 20
-LOOP_TARGET_PARTITION_CONF = "spark.verum.loop.targetPartitionBytes"
-
-
-def loop_shuffle_partitions(
-    spark: SparkSession, rows: int, row_bytes: int = 16
-) -> int:
-    """Scale-adaptive shuffle partition count for the iteration loops.
-
-    The loops run with AQE off (``iterative_conf``), so the static count is
-    binding — and the session default is sized for the whole relational
-    surface (2x cores locally; O(total-input-bytes/128MB) on a cluster,
-    per engine.session), not for one loop's O(E) working set. Derive the
-    loop's count from ITS input instead (guide §2.2 "fewer, larger reduce
-    partitions"): ceil(rows*row_bytes / target), floored at
-    ``defaultParallelism`` (every core gets work at any size) and capped at
-    the session value (the deployment's chosen upper bound). At bench
-    scale (3.45M edges, 32 cores) the floor binds — 32 partitions measured
-    0.71 s vs 1.2 s per pagerank iteration against the 2x-cores default
-    (interleaved A/B, tools/probe_iter.py); at cluster scale the bytes
-    term dominates and grows with the data, so tasks stay ~target-sized.
-    """
-    conf = spark.conf
-    target = int(conf.get(LOOP_TARGET_PARTITION_CONF,
-                          str(LOOP_TARGET_PARTITION_BYTES)))
-    cores = _executor_cores(spark)
-    session_p = int(conf.get("spark.sql.shuffle.partitions"))
-    by_bytes = -(-int(rows) * row_bytes // max(target, 1))  # ceil div
-    return max(1, min(max(by_bytes, cores), max(session_p, cores)))
-
-
-def _executor_cores(spark: SparkSession) -> int:
-    """Concurrent task slots — the loop partition floor. NOT
-    ``defaultParallelism``: engine.session sets ``spark.default.parallelism``
-    to 2x the core count, which is a parallelism default, not the slot
-    count. ``local[N]`` is parsed directly; on a cluster the scheduler's
-    ``defaultParallelism`` (total cores when ``spark.default.parallelism``
-    is unset) is the available proxy — at worst a 2x-high floor there,
-    where the bytes term dominates anyway. ``spark.verum.loop.minPartitions``
-    overrides both."""
-    explicit = spark.conf.get("spark.verum.loop.minPartitions", None)
-    if explicit is not None:
-        return int(explicit)
-    master = spark.sparkContext.master
-    if master.startswith("local["):
-        n = master[6:].rstrip("]")
-        if n != "*":
-            return int(n)
-        return os.cpu_count() or 2
-    return spark.sparkContext.defaultParallelism
-
-
-def set_loop_partitions(spark: SparkSession, rows: int, row_bytes: int = 16) -> int:
-    """Apply :func:`loop_shuffle_partitions` mid-loop (for operators whose
-    input size is first observed on their setup materialization). Must run
-    inside ``iterative_conf``, which restores the session value on exit."""
-    p = loop_shuffle_partitions(spark, rows, row_bytes)
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    return p
-
-
-@contextmanager
-def iterative_conf(
-    spark: SparkSession,
-    loop_rows: int | None = None,
-    row_bytes: int = 16,
-):
-    """Pin query-planning conf for driver-controlled iteration loops; restore
-    on exit so relational queries keep AQE.
-
-    ``loop_rows``: when the loop's input row count is known up front, the
-    loop's ``spark.sql.shuffle.partitions`` is set scale-adaptively via
-    :func:`loop_shuffle_partitions` (and restored on exit). Operators whose
-    size is only observed on the setup materialization call
-    :func:`set_loop_partitions` instead — the restore here covers both."""
-    conf = spark.conf
-    saved = {
-        "spark.sql.adaptive.enabled": conf.get("spark.sql.adaptive.enabled"),
-        "spark.sql.join.preferSortMergeJoin": conf.get(
-            "spark.sql.join.preferSortMergeJoin"
-        ),
-        "spark.sql.shuffle.partitions": conf.get("spark.sql.shuffle.partitions"),
-    }
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    if loop_rows is not None:
-        conf.set(
-            "spark.sql.shuffle.partitions",
-            str(loop_shuffle_partitions(spark, loop_rows, row_bytes)),
-        )
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            conf.set(k, v)
 
 
 @dataclass
@@ -239,11 +138,9 @@ def pagerank(
     weighted: bool = True,
     personalization: DataFrame | None = None,
     checkpoint: RunCheckpoint | None = None,
-    checkpoint_every: int = 1,
     resume: bool = False,
     salt_hub_threshold: int | None = None,
     salt_buckets: int = 16,
-    broadcast_state: bool | None = None,
     edges_pre_partitioned: bool = False,
     initial_ranks: DataFrame | None = None,
 ) -> PageRankResult:
@@ -253,8 +150,15 @@ def pagerank(
     personalization, weight handling, dangling mass distributed by the
     teleport vector) so the t2 oracle comparison is apples-to-apples.
 
+    ``edges``: pass a materialized (cached or checkpointed) table — the
+    loop sizing counts it once before the loop.
+
     ``personalization``: optional (vid, mass) DataFrame — Verum's topic
     seed set; normalized internally; missing vids get mass 0.
+
+    ``checkpoint``: when given, every iteration's state is written to it
+    and committed (the resumable path); ``resume`` restarts from its last
+    committed iteration, salvaging a half-written one.
 
     ``edges_pre_partitioned``: True when ``edges`` comes from a bucketed
     table clustered by src (graph.save_edges_bucketed with buckets ==
@@ -288,14 +192,13 @@ def pagerank(
     with iterative_conf(spark, loop_rows=loop_rows):
         return _pagerank_loop(
             spark, edges, vertices, alpha, tol, max_iter, weighted,
-            personalization, checkpoint, checkpoint_every, resume,
-            salt_hub_threshold, salt_buckets, broadcast_state,
+            personalization, checkpoint, resume,
+            salt_hub_threshold, salt_buckets,
             edges_pre_partitioned, initial_ranks,
         )
 
 
-def _gather_update(norm, ranks, p_col, alpha, dangling, has_hubs, bcast,
-                   _prebuilt=None):
+def _gather_update(norm, ranks, p_col, alpha, dangling, has_hubs, bcast, pre):
     """ONE synchronous PageRank update as a DataFrame expression:
     gather edges(src)⋈ranks -> per-dst contribution sum (hub-salted partial
     stage when hubs are present) -> damped update joined back onto the
@@ -307,14 +210,13 @@ def _gather_update(norm, ranks, p_col, alpha, dangling, has_hubs, bcast,
     input that could otherwise drift, and the resume test asserts
     equality at 1e-12.
 
-    ``_prebuilt``: optional iteration-invariant Column subtrees from
+    ``pre``: the iteration-invariant Column subtrees from
     :func:`_prebuild_update_cols` — Columns are immutable name-resolved
     trees, so the loop builds them ONCE and only the per-iteration
     ``dangling`` literal is grafted in here (the assembled tree is
     shape-identical to the inline form, so the float arithmetic is
     unchanged; this only cuts the per-iteration py4j expression-building
     chatter, measured ~0.1s/iteration on this host)."""
-    pre = _prebuilt or _prebuild_update_cols(p_col, alpha)
     gathered = norm.join(
         bcast(ranks.select(F.col("vid").alias("src"), "value")), "src"
     )
@@ -354,8 +256,8 @@ def _prebuild_update_cols(p_col, alpha):
 
 def _pagerank_loop(
     spark, edges, vertices, alpha, tol, max_iter, weighted, personalization,
-    checkpoint, checkpoint_every, resume, salt_hub_threshold, salt_buckets,
-    broadcast_state, edges_pre_partitioned=False, initial_ranks=None,
+    checkpoint, resume, salt_hub_threshold, salt_buckets,
+    edges_pre_partitioned=False, initial_ranks=None,
 ) -> PageRankResult:
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # Narrow vertex ids to int32 when they fit (dense vids fit up to 2^31
@@ -443,9 +345,7 @@ def _pagerank_loop(
             0, True, 0.0,
         )
     p_col = F.coalesce(F.col("p"), F.lit(1.0 / n))
-    if broadcast_state is None:
-        broadcast_state = n <= BROADCAST_STATE_MAX_V
-    bcast = F.broadcast if broadcast_state else (lambda df: df)
+    bcast = F.broadcast if n <= BROADCAST_STATE_MAX_V else (lambda df: df)
 
     start_iter = 0
     resumed_from = None
@@ -499,6 +399,9 @@ def _pagerank_loop(
 
     converged = False
     delta = float("inf")
+    # Iteration-invariant Column subtrees, built once and shared by the
+    # salvage and the loop — only the dangling literal changes per iteration.
+    pre = _prebuild_update_cols(p_col, alpha)
 
     # ---- mid-iteration salvage (north rule): a crash DURING iteration
     # start_iter+1's state write left a staging marker and a subset of its
@@ -520,7 +423,7 @@ def _pagerank_loop(
                 # those hash partitions in the sealed state (ADVICE r2).
                 checkpoint.clear_job_debris(it_s)
                 new_full = _gather_update(
-                    norm, ranks, p_col, alpha, dangling, has_hubs, bcast,
+                    norm, ranks, p_col, alpha, dangling, has_hubs, bcast, pre,
                 ).select(*STATE_COLS)
                 part = F.pmod(F.hash("vid"), F.lit(p_s))
                 new_full.filter(part.isin(missing)).repartition(
@@ -550,16 +453,13 @@ def _pagerank_loop(
     it = start_iter
     prev_cached = ranks
     loop_start = (max_iter + 1) if converged else (start_iter + 1)
-    # Iteration-invariant Column subtrees + observation aggregates, built
-    # once — only the dangling literal changes per iteration.
-    pre = _prebuild_update_cols(p_col, alpha)
+    # Observation aggregates, built once.
     obs_delta = F.sum("diff").alias("delta")
     obs_dang = F.sum(F.when(F.col("dang"), F.col("value"))).alias("dang_mass")
     for it in range(loop_start, max_iter + 1):
         t0 = time.monotonic()
         new_ranks = _gather_update(
-            norm, ranks, p_col, alpha, dangling, has_hubs, bcast,
-            _prebuilt=pre,
+            norm, ranks, p_col, alpha, dangling, has_hubs, bcast, pre,
         )
         obs = Observation(f"pr_{it}")
         # Observe BELOW the slimming select: the delta/dangling metrics ride
@@ -567,11 +467,7 @@ def _pagerank_loop(
         # ``diff`` column (less block-write traffic per iteration).
         staged = new_ranks.observe(obs, obs_delta, obs_dang).select(*STATE_COLS)
 
-        if it == start_iter + 1 and os.environ.get("VERUM_EXPLAIN"):
-            print(f"=== pagerank iteration plan (it={it}) ===", flush=True)
-            staged.explain("formatted")
-
-        if checkpoint is not None and (it % checkpoint_every == 0):
+        if checkpoint is not None:
             # Stage marker + hash(vid) alignment: the explicit repartition
             # pins file part-index == pmod(hash(vid), P) so a crash between
             # here and commit() is recoverable per-partition (salvage
@@ -588,9 +484,8 @@ def _pagerank_loop(
             metrics.append(m)
             checkpoint.commit(it, m, list(staged.columns))
             # The parquet snapshot is now the state of record — release the
-            # prior iteration's localCheckpoint blocks (ADVICE r1: with
-            # checkpoint_every=1 the initial state otherwise stays pinned
-            # for the whole run).
+            # prior iteration's localCheckpoint blocks (ADVICE r1: the
+            # initial state otherwise stays pinned for the whole run).
             if prev_cached is not None:
                 prev_cached.unpersist()
                 prev_cached = None
@@ -630,7 +525,6 @@ def pagerank_delta(
     personalization: DataFrame | None = None,
     initial_ranks: DataFrame | None = None,
     frontier_c: float = 0.8,
-    broadcast_state: bool | None = None,
     tail_c: float | None = 0.25,
     tail_trigger_frac: float = 0.125,
 ) -> PageRankResult:
@@ -725,14 +619,14 @@ def pagerank_delta(
     with iterative_conf(spark, loop_rows=edges.count()):
         return _delta_loop(
             spark, edges, vertices, alpha, tol, max_iter, weighted,
-            personalization, initial_ranks, frontier_c, broadcast_state,
+            personalization, initial_ranks, frontier_c,
             tail_c, tail_trigger_frac,
         )
 
 
 def _delta_loop(
     spark, edges, vertices, alpha, tol, max_iter, weighted,
-    personalization, initial_ranks, frontier_c, broadcast_state,
+    personalization, initial_ranks, frontier_c,
     tail_c=None, tail_trigger_frac=0.125,
 ):
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -802,9 +696,7 @@ def _delta_loop(
             0, True, 0.0,
         )
     p_col = F.coalesce(F.col("p"), F.lit(1.0 / n))
-    if broadcast_state is None:
-        broadcast_state = n <= BROADCAST_STATE_MAX_V
-    bcast = F.broadcast if broadcast_state else (lambda df: df)
+    bcast = F.broadcast if n <= BROADCAST_STATE_MAX_V else (lambda df: df)
 
     sobs = Observation("prd_init")
     resid_mass = F.sum(F.abs(F.col("resid"))).alias("rm")
@@ -1032,26 +924,5 @@ def _iter_metrics(
         # Committed so a resumed run reuses the exact observed value
         # rather than re-deriving it via a differently-ordered float sum.
         m["dang_mass"] = dang_mass
-    if os.environ.get("VERUM_ITER_STATS"):
-        m.update(_env_stats())
     return m
 
-
-def _env_stats() -> dict:
-    """GC-total + host-steal snapshot (diagnostic; VERUM_ITER_STATS=1)."""
-    out: dict[str, float] = {}
-    try:
-        spark = SparkSession.getActiveSession()
-        beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
-        out["gc_total_ms"] = sum(
-            beans.get(i).getCollectionTime() for i in range(beans.size())
-        )
-    except Exception:
-        pass
-    try:
-        f = open("/proc/stat").readline().split()
-        out["steal_ticks"] = int(f[8])
-        out["cpu_ticks"] = sum(int(x) for x in f[1:])
-    except Exception:
-        pass
-    return out

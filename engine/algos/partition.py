@@ -59,8 +59,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from engine.algos.loopstate import fresh_checkpoint
-from engine.algos.pagerank import iterative_conf
+from engine.algos.loopstate import fresh_checkpoint, iterative_conf
 
 
 @dataclass

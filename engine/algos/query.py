@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf
+from engine.algos.loopstate import iterative_conf
 
 
 def context_query(

@@ -53,8 +53,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf
-from engine.algos.loopstate import fresh_checkpoint
+from engine.algos.loopstate import fresh_checkpoint, iterative_conf
 
 
 @dataclass

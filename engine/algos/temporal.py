@@ -35,7 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf
+from engine.algos.loopstate import iterative_conf
 
 
 @dataclass
@@ -65,7 +65,7 @@ def earliest_arrival(
     ``horizon`` drops arrivals beyond a time bound each round, keeping
     local incident-response queries O(neighborhood) on a huge graph.
     """
-    # Scale-adaptive loop partitioning (see pagerank.loop_shuffle_partitions).
+    # Scale-adaptive loop partitioning (see loopstate.loop_shuffle_partitions).
     with iterative_conf(spark, loop_rows=edges.count(), row_bytes=32):
         return _ea_loop(
             spark, edges, sources, ts_col, dur_col, strict, max_iter, horizon

@@ -34,8 +34,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.loopstate import fresh_checkpoint
-from engine.algos.pagerank import iterative_conf
+from engine.algos.loopstate import fresh_checkpoint, iterative_conf
 
 
 @dataclass
@@ -57,7 +56,7 @@ def topological_layers(
     count as cycles. Parallel edges are collapsed (in-degree is counted
     over DISTINCT (src, dst) so duplicates don't inflate the peel gate).
     """
-    # Scale-adaptive loop partitioning (see pagerank.loop_shuffle_partitions).
+    # Scale-adaptive loop partitioning (see loopstate.loop_shuffle_partitions).
     with iterative_conf(spark, loop_rows=edges.count()):
         return _kahn(spark, edges, vertices, max_depth, require_dag)
 

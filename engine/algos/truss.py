@@ -32,7 +32,8 @@ ONCE into a static (edge, other1, other2) table — 3 rows per triangle, the
 irreducible size of the input to any triangle-aware algorithm — and each
 round is two equi-joins of that table against the O(E) estimate state plus
 one windowed h-index pass, everything codegen'd, convergence by the same
-count+xxhash64 checksum as kcore/lpa (one scalar job per round).
+count+xxhash64 checksum as kcore/lpa, observed on the round's own
+materialization (no extra job).
 
 Oracle: trussness(e) == max k with e in networkx.k_truss(G, k), exact
 (tests/test_truss.py), and k_truss edge sets == nx.k_truss(G, k).edges.
@@ -45,7 +46,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf
+from engine.algos.loopstate import iterative_conf, observed_checkpoint
 from engine.algos.triangles import _oriented
 
 
@@ -207,20 +208,10 @@ def _truss_loop(spark, edges, max_iter):
 
     # est0 = support; the h-operator only lowers it (guarded by least()),
     # monotone integer descent onto lambda = trussness - 2.
-    est = (
-        inc.groupBy("e")
-        .agg(F.count(F.lit(1)).cast("int").alias("est"))
-        .localCheckpoint(eager=True)
+    est, prev_cs = observed_checkpoint(
+        inc.groupBy("e").agg(F.count(F.lit(1)).cast("int").alias("est")),
+        "e", "est",
     )
-
-    def checksum(df):
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("e", "est")), F.lit(0)).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
-
-    prev_cs = checksum(est)
     w = Window.partitionBy("e").orderBy(F.desc("m"), "f")
     converged = False
     it = 0
@@ -235,12 +226,11 @@ def _truss_loop(spark, edges, max_iter):
             .groupBy("e")
             .agg(F.max(F.least("m", "rn")).cast("int").alias("h"))
         )
-        new_est = (
+        new_est, cs = observed_checkpoint(
             est.join(hidx, "e", "left")
-            .select("e", F.least("est", F.coalesce("h", F.lit(0))).alias("est"))
-            .localCheckpoint(eager=True)
+            .select("e", F.least("est", F.coalesce("h", F.lit(0))).alias("est")),
+            "e", "est",
         )
-        cs = checksum(new_est)
         old, est = est, new_est
         old.unpersist()
         if cs == prev_cs:

@@ -20,8 +20,8 @@ Per step: state (walk_id, cur, path) joins degree-ranked adjacency on
 (cur, pick) — both tables hash-partitioned on the vertex key; dead ends
 (out-degree 0) freeze the walk, which simply stops extending. The path
 column grows as array<long> — L × 8 bytes per walk, columnar. Lineage is
-cut with an eager localCheckpoint every few steps (the join tower is
-otherwise L levels deep).
+cut with an eager localCheckpoint every ``CKPT_EVERY`` steps and after the
+last (the join tower is otherwise L levels deep).
 
 Oracle properties (tests/test_walks.py): every consecutive pair is a
 real edge; exact walk count; bit-identical reruns; seed sensitivity;
@@ -33,7 +33,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.algos.pagerank import iterative_conf
+from engine.algos.loopstate import iterative_conf
+
+# Steps between lineage-cutting state materializations.
+CKPT_EVERY = 4
 
 
 def random_walks(
@@ -42,7 +45,6 @@ def random_walks(
     walk_length: int = 10,
     walks_per_vertex: int = 1,
     seed: int = 17,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """(walk_id, path: array<long>) — one row per walk.
 
@@ -55,16 +57,14 @@ def random_walks(
         raise ValueError(
             f"walks_per_vertex must be >= 1, got {walks_per_vertex}"
         )
-    # Scale-adaptive loop partitioning (see pagerank.loop_shuffle_partitions);
+    # Scale-adaptive loop partitioning (see loopstate.loop_shuffle_partitions);
     # walk picks are hash-of-(vid, step, seed) indexed into the deterministic
     # rank order, so the physical partition count never touches the output.
     with iterative_conf(spark, loop_rows=edges.count()):
-        return _walk_loop(
-            spark, edges, walk_length, walks_per_vertex, seed, checkpoint_every
-        )
+        return _walk_loop(spark, edges, walk_length, walks_per_vertex, seed)
 
 
-def _walk_loop(spark, edges, L, W, seed, ckpt_every):
+def _walk_loop(spark, edges, L, W, seed):
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # Degree-ranked adjacency (v, pick in [0, deg), nbr, nbr_deg) — the
     # sorted-nbr rank order is the deterministic contract the hash
@@ -137,7 +137,7 @@ def _walk_loop(spark, edges, L, W, seed, ckpt_every):
                 .otherwise(F.concat("path", F.array("nbr"))).alias("path"),
             )
         )
-        if t % ckpt_every == 0 or t == L:
+        if t % CKPT_EVERY == 0 or t == L:
             new_state = stepped.localCheckpoint(eager=True)
             state.unpersist()
             state = new_state
@@ -157,7 +157,6 @@ def node2vec_walks(
     p: float = 1.0,
     q: float = 1.0,
     seed: int = 17,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """(walk_id, path: array<long>) — second-order biased walk corpus
     (node2vec, Grover & Leskovec KDD'16 — public knowledge): from state
@@ -203,11 +202,10 @@ def node2vec_walks(
     with iterative_conf(spark, loop_rows=edges.count()):
         return _node2vec_loop(
             spark, edges, walk_length, walks_per_vertex, p, q, seed,
-            checkpoint_every,
         )
 
 
-def _node2vec_loop(spark, edges, L, W, p, q, seed, ckpt_every):
+def _node2vec_loop(spark, edges, L, W, p, q, seed):
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     adj = (
         edges.select(F.col("src").alias("v"), F.col("dst").alias("nbr"))
@@ -280,7 +278,7 @@ def _node2vec_loop(spark, edges, L, W, p, q, seed, ckpt_every):
             F.when(F.col("nxt").isNull(), F.col("path"))
             .otherwise(F.concat("path", F.array("nxt"))).alias("path"),
         )
-        if t % ckpt_every == 0 or t == L:
+        if t % CKPT_EVERY == 0 or t == L:
             new_state = stepped.localCheckpoint(eager=True)
             state.unpersist()
             state = new_state

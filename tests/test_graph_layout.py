@@ -112,7 +112,8 @@ def test_bucketed_table_no_edge_exchange(spark, tiny_graph):
     groupBy(src) and the PageRank prep run with no Exchange on the edge
     side, and pagerank(edges_pre_partitioned=True) matches the plain run."""
     import numpy as np
-    from engine.algos.pagerank import pagerank, _prepare_edges, iterative_conf
+    from engine.algos.loopstate import iterative_conf
+    from engine.algos.pagerank import pagerank, _prepare_edges
     from engine.graph import load_edges_bucketed, save_edges_bucketed
 
     v, e = tiny_graph

@@ -92,7 +92,7 @@ def test_step_join_does_not_reshuffle_adjacency(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from engine.algos.pagerank import iterative_conf
+    from engine.algos.loopstate import iterative_conf
 
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = edges_df(spark, [(i, (i * 3 + 1) % 20) for i in range(20)])
