@@ -10,9 +10,15 @@ pruned ``enrichment``/``classification`` fan-out nodes; our vertex types
 make ``lang``/``commit`` the natural analogues — a popular lang would
 otherwise connect everything to everything at depth 2).
 
-Returns the induced subgraph. Depth is small (<=4) so the frontier loop
-needs no durable checkpointing; `left_anti` maintains the visited set
-(SURVEY.md Table B J4/J5).
+Returns the induced subgraph. No adjacency is built: each frontier expands
+straight off ``edges`` with two semi-joins (``src`` in the frontier gives
+``dst``, ``dst`` in the frontier gives ``src``), and ``left_anti`` against
+the visited set keeps only new vertices (SURVEY.md Table B J4/J5). Every
+depth, the topic's distinct vids at depth 0 included, is one observed
+checkpoint: the caller's ``topic`` is read once, and the observed count
+ends the loop without a separate emptiness job. The visited set is the
+union of those per-depth checkpoints. Depth is small (<=4), so the loop
+needs no durable checkpointing.
 """
 
 from __future__ import annotations
@@ -20,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.algos.loopstate import iterative_conf
+from engine.algos.loopstate import iterative_conf, observed_checkpoint
 
 
 def context_query(
@@ -33,48 +39,36 @@ def context_query(
 ) -> tuple[DataFrame, DataFrame]:
     """(sub_vertices(vid, name, vtype, depth), induced sub_edges)."""
     with iterative_conf(spark):
-        return _query_loop(spark, vertices, edges, topic, max_depth, dont_follow)
+        return _query_loop(vertices, edges, topic, max_depth, dont_follow)
 
 
-def _query_loop(spark, vertices, edges, topic, max_depth, dont_follow):
-    nbrs = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .unionByName(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
+def _query_loop(vertices, edges, topic, max_depth, dont_follow):
+    expandable = vertices.filter(~F.col("vtype").isin(list(dont_follow))).select("vid")
+    # Both directions of every edge, unmaterialized: the optimizer pushes
+    # the frontier semi-join below the union, and both directions reuse one
+    # frontier exchange (a frontier renamed to src and to dst is built twice).
+    ends = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).unionByName(
+        edges.select(F.col("dst").alias("a"), F.col("src").alias("b"))
     )
-    typed = vertices.select("vid", "vtype")
-
-    visited = topic.select("vid").distinct().withColumn("depth", F.lit(0))
-    frontier = visited.select("vid")
-    # Checkpoints still readable by the NEXT round (frontier + visited);
-    # older ones are released as soon as their last consumer materializes.
-    live: list[DataFrame] = []
+    frontier, (n, _) = observed_checkpoint(
+        topic.select("vid").distinct().withColumn("depth", F.lit(0)), "vid"
+    )
+    visited = frontier
     for d in range(1, max_depth + 1):
-        expandable = frontier.join(typed, "vid").filter(
-            ~F.col("vtype").isin(list(dont_follow))
-        ).select("vid")
-        nxt = (
-            nbrs.join(expandable.withColumnRenamed("vid", "u"), "u", "left_semi")
-            .select(F.col("v").alias("vid"))
-            .distinct()
-            .join(visited.select("vid"), "vid", "left_anti")
-            .withColumn("depth", F.lit(d))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            nxt.unpersist()
+        if n == 0:
             break
-        new_visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        # Both reads of the previous round's states are now materialized —
-        # release them (bounds cached state to 2 frames, not O(depth)).
-        for df in live:
-            df.unpersist()
-        live = [nxt, new_visited]
-        visited = new_visited
-        frontier = nxt.select("vid")
+        # shuffle_hash: broadcasting the vertices or the visited set costs a
+        # Spark job per depth; a shuffle is a stage of the checkpoint's job.
+        u = frontier.select("vid").join(expandable.hint("shuffle_hash"), "vid", "left_semi")
+        reached = ends.join(u.withColumnRenamed("vid", "a"), "a", "left_semi")
+        frontier, (n, _) = observed_checkpoint(
+            reached.select(F.col("b").alias("vid")).distinct()
+            .join(visited.select("vid").hint("shuffle_hash"), "vid", "left_anti")
+            .withColumn("depth", F.lit(d)),
+            "vid",
+        )
+        visited = visited.unionByName(frontier)
 
-    nbrs.unpersist()  # only the loop reads it; results reference edges/visited
     sub_vertices = vertices.join(visited, "vid").select("vid", "name", "vtype", "depth")
     keep = visited.select("vid")
     sub_edges = (

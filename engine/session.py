@@ -124,6 +124,7 @@ def get_spark(
                 flush=True,
             )
 
+    engine_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -178,6 +179,10 @@ def get_spark(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_WAREHOUSE_DIR", "/tmp/verum_spark_warehouse"),
         )
+        # Python workers fork from engine.pydaemon (see there), importable
+        # from any working directory.
+        .config("spark.python.daemon.module", "engine.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", engine_parent)
     )
     if extra:
         for k, v in extra.items():

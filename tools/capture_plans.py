@@ -114,6 +114,11 @@ def main() -> None:
         scores = in_degrees(e).select(
             "vid", F.col("in_deg").cast("double").alias("value"))
         ppr_sweep(spark, e, seeds=[0], scores=scores, top_k=200)
+    elif op == "query":
+        from engine.algos.query import context_query
+        topic = v.filter(F.col("vtype") == "repo").orderBy("vid").limit(2).select("vid")
+        sub_v, sub_e = context_query(spark, v, e, topic, max_depth=3)
+        sub_v.count(), sub_e.count()
     elif op == "pagerank":
         from engine.algos.pagerank import pagerank
         pagerank(spark, e, vertices=v, tol=0.0, max_iter=3)
